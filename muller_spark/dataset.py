@@ -21,6 +21,7 @@ partition-local index), never through a driver collect.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any, Callable, Iterable, Mapping, Sequence
 
@@ -143,13 +144,11 @@ class Dataset:
         if not snap.data_dirs:
             return self._empty_df(dict(snap.tensor_meta))
         paths = [os.path.join(self.path, d) for d in snap.data_dirs]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        for name, meta in snap.tensor_meta.items():
-            if name not in df.columns:
-                df = df.withColumn(
-                    name,
-                    F.lit(None).cast(spark_type_for(meta.get("htype", "generic"), meta.get("dtype"))),
-                )
+        # read with the schema the commit recorded: inferring it (one
+        # footer-reading job per read) would re-learn a known schema, and
+        # a column an older data dir lacks still reads as NULL
+        schema = T.StructType.fromJson(json.loads(snap.schema_json))
+        df = self.spark.read.schema(schema).parquet(*paths)
         order = [UUID_COL, ROW_ID_COL] + [t for t in snap.tensor_meta]
         return df.select(*order)
 
@@ -723,14 +722,8 @@ class Dataset:
         indexed_commit = idx.manifest.get("commit_id")
         if indexed_commit == self._snapshot.commit_id:
             return idx
-        try:
-            old_snap = self.log.get_snapshot(indexed_commit)
-        except KeyError:
-            old_snap = None
-        append_only = old_snap is not None and set(old_snap.data_dirs) <= set(
-            self._snapshot.data_dirs
-        )
-        if append_only:
+        old_snap = self._append_base(indexed_commit)
+        if old_snap is not None:
             delta = self.df.filter(F.col(ROW_ID_COL) >= old_snap.row_count)
             return idx.update(delta, commit_id=self._snapshot.commit_id)
         m = idx.manifest
@@ -1019,12 +1012,13 @@ class Dataset:
 
     def update_vector_index(self, tensor_name: str, index_name: str = "default") -> None:
         """Refresh a stale index after commits (reference
-        ``update_vector_index``, ``vector_search_ops.py:51-82``): rows not
-        yet in the assignment table are assigned to the EXISTING centroids
-        and appended — O(delta), no retrain, no rebuild.  No-op when the
-        index already matches HEAD."""
-        import json as _json
-
+        ``update_vector_index``, ``vector_search_ops.py:51-82``) by the
+        same rule as :meth:`update_index`: after append-only commits, only
+        the rows past the indexed commit's row count are assigned to the
+        EXISTING centroids and appended — O(delta), no retrain.  After a
+        rewrite (update/pop/merge) row ids were renumbered, so the index
+        is rebuilt from its manifest's config.  No-op when the index
+        already matches HEAD."""
         from muller_spark.errors import VectorIndexNotFoundError
         from muller_spark.index.vector import append_ivf_assignments
 
@@ -1033,43 +1027,62 @@ class Dataset:
             raise VectorIndexNotFoundError(f"{tensor_name}/{index_name}")
         if m.get("commit_id") == self._snapshot.commit_id:
             return
+        loaded = self._vector_loaded.get((tensor_name, index_name))
+        old_snap = self._append_base(m.get("commit_id"))
+        if old_snap is None:
+            self.create_vector_index(
+                tensor_name, index_name, index_type=m["index_type"],
+                metric=m["metric"], **m.get("hyper", {}),
+            )
+            if loaded is not None:
+                self.load_vector_index(tensor_name, index_name)
+            return
         idx_dir = os.path.join(self.path, "_indexes", "vector", tensor_name, index_name)
+        delta = self.df.filter(F.col(ROW_ID_COL) >= old_snap.row_count).select(
+            ROW_ID_COL, tensor_name
+        )
         if os.path.isdir(os.path.join(idx_dir, "codes")):
             from muller_spark.index.vector import append_ivfpq_codes
 
-            known = self.spark.read.parquet(os.path.join(idx_dir, "codes")).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
             append_ivfpq_codes(delta, tensor_name, ROW_ID_COL, idx_dir)
         elif os.path.isdir(os.path.join(idx_dir, "adjacency")):
             # disk graph: rebuild only the delta's touched cells
             from muller_spark.index.graph import append_graph_vectors
 
-            known = self.spark.read.parquet(
-                os.path.join(idx_dir, "vectors")
-            ).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
             append_graph_vectors(
                 delta, tensor_name, ROW_ID_COL, idx_dir,
                 R=int(m.get("hyper", {}).get("R", 12)),
             )
         elif os.path.isdir(os.path.join(idx_dir, "assign")):
-            known = self.spark.read.parquet(os.path.join(idx_dir, "assign")).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
             qb = m.get("hyper", {}).get("quantize_bits")
             append_ivf_assignments(
                 delta, tensor_name, ROW_ID_COL, idx_dir,
                 quantize_bits=int(qb) if qb is not None else None,
+                centroids=loaded.get("centroids") if loaded else None,
             )
         m["commit_id"] = self._snapshot.commit_id
-        self.fs.write_text(os.path.join(idx_dir, "manifest.json"), _json.dumps(m))
-        if (tensor_name, index_name) in self._vector_loaded:
-            self.load_vector_index(tensor_name, index_name)
+        self.fs.write_text(os.path.join(idx_dir, "manifest.json"), json.dumps(m))
+        if loaded is not None:
+            # centroids and codebooks are unchanged; only the opened
+            # tables must re-list their files to see the appended ones
+            loaded["manifest"] = m
+            for key, sub in (("assign_df", "assign"), ("codes_df", "codes")):
+                if key in loaded:
+                    loaded[key] = self.spark.read.schema(loaded[key].schema).parquet(
+                        os.path.join(idx_dir, sub)
+                    )
+
+    def _append_base(self, indexed_commit: "str | None") -> "Snapshot | None":
+        """The indexed commit's snapshot iff HEAD only appended rows since
+        it (its data dirs are all still live), so rows below its row
+        count kept their ids; None when an index must be rebuilt."""
+        try:
+            old_snap = self.log.get_snapshot(indexed_commit)
+        except KeyError:
+            return None
+        if set(old_snap.data_dirs) <= set(self._snapshot.data_dirs):
+            return old_snap
+        return None
 
     # ------------------------------------------------------------------
     # version control
@@ -1227,8 +1240,10 @@ class Dataset:
             return theirs.commit_id
 
         base = self.log.get_snapshot(lca_id)
-        merged_df, merged_meta, next_uuid = three_way_merge(
-            self,
+        commit_id = self.log.new_commit_id()
+        rel_dir = os.path.join("data", commit_id)
+        out_dir = os.path.join(self.path, rel_dir)
+        with three_way_merge(
             ours_df=self._read_snapshot_df(ours),
             theirs_df=self._read_snapshot_df(theirs),
             base_df=self._read_snapshot_df(base),
@@ -1241,19 +1256,17 @@ class Dataset:
             delete_removed_tensors=delete_removed_tensors,
             force=force,
             next_uuid=max(ours.next_uuid, theirs.next_uuid),
-        )
-        commit_id = self.log.new_commit_id()
-        rel_dir = os.path.join("data", commit_id)
-        merged_df.write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
-        written = self.spark.read.parquet(os.path.join(self.path, rel_dir))
+        ) as (merged_df, merged_meta, next_uuid):
+            merged_df.write.mode("overwrite").parquet(out_dir)
+        row_count = self.spark.read.schema(merged_df.schema).parquet(out_dir).count()
         snap = self.log.commit(
             parent_ids=[ours.commit_id, theirs.commit_id],
             branch=self.branch,
             message=f"merge {target_id} into {self.branch}",
             data_dirs=[rel_dir],
-            schema_json=written.schema.json(),
+            schema_json=merged_df.schema.json(),
             tensor_meta=merged_meta,
-            row_count=written.count(),
+            row_count=row_count,
             next_uuid=next_uuid,
             commit_id=commit_id,
         )
@@ -1310,6 +1323,10 @@ class Dataset:
         base_df = self._read_snapshot_df(base)
         out = {}
         for label, snap in ((id_1, snap_1), (id_2 or "HEAD", snap_2)):
+            if as_dict and snap.commit_id == lca_id:
+                # the LCA itself: empty by definition, no join to run
+                out[label] = {"appended": [], "popped": [], "updated": {}}
+                continue
             tensors = [t for t in snap.tensor_meta if t in base.tensor_meta]
             df = self._read_snapshot_df(snap)
             out[label] = (

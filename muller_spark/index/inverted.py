@@ -97,6 +97,102 @@ def tokenize_py(text: str, case_sensitive: bool = False,
     return toks
 
 
+def _posting_rows(
+    df: DataFrame,
+    tensor: str,
+    id_col: str,
+    case_sensitive: bool,
+    stop_words: Sequence[str] | None,
+    is_text: bool,
+    positions: bool,
+) -> "tuple[DataFrame, bool]":
+    """Tokenize ``tensor`` into posting rows ``(id, term)`` — distinct
+    pairs — or, positional, ``(id, pos, term)`` (unique by construction:
+    one per token slot).  Also returns whether the CJK tokenizer ran."""
+    col = F.col(tensor)
+    if is_text:
+        # one bounded probe job decides the tokenizer for the whole
+        # build: pure regex split stays JVM-side (the fast path);
+        # corpora containing CJK route through the Arrow-batched
+        # Python tokenizer so index-side and query-side tokens agree
+        # (tokenize_py is used for both)
+        has_cjk = bool(df.filter(col.rlike("[一-鿿㐀-䶿]")).limit(1).take(1))
+        if has_cjk:
+            from pyspark.sql.types import ArrayType, StringType
+
+            stop_set = frozenset(stop_words) if stop_words else None
+            # lambda (not a hinted def): stringified hints from
+            # `from __future__ import annotations` are unsupported
+            # by pandas_udf signature inference in pyspark 4.1
+            tok_udf = F.pandas_udf(
+                lambda batch: batch.map(
+                    lambda t: tokenize_py(
+                        t, case_sensitive=case_sensitive, stop_words=stop_set
+                    )
+                ),
+                ArrayType(StringType()),
+            )
+            tok_arr = tok_udf(col)
+            if positions:
+                exploded = df.select(
+                    F.col(id_col).alias("id"),
+                    F.posexplode(tok_arr).alias("pos", "term"),
+                ).filter(F.col("term") != "")
+            else:
+                exploded = (
+                    df.select(
+                        F.col(id_col).alias("id"),
+                        F.explode(tok_arr).alias("term"),
+                    )
+                    .filter(F.col("term") != "")
+                )
+        else:
+            from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX_CS
+
+            if case_sensitive:
+                base, split_re = col, TOKEN_SPLIT_REGEX_CS
+            else:
+                base, split_re = F.lower(col), TOKEN_SPLIT_REGEX
+            terms = F.split(base, split_re)
+            if positions:
+                # positions index the FILTERED token stream (empties
+                # and stop words removed before numbering), matching
+                # the query-side tokenize_py stream — adjacency is
+                # over surviving tokens on both sides
+                kept = F.filter(terms, lambda t: t != "")
+                if stop_words:
+                    stop_arr = F.array(*[F.lit(w) for w in stop_words])
+                    kept = F.filter(
+                        kept, lambda t: ~F.array_contains(stop_arr, t)
+                    )
+                exploded = df.select(
+                    F.col(id_col).alias("id"),
+                    F.posexplode(kept).alias("pos", "term"),
+                )
+            else:
+                exploded = (
+                    df.select(
+                        F.col(id_col).alias("id"),
+                        F.explode(terms).alias("term"),
+                    )
+                    .filter(F.col("term") != "")
+                )
+                if stop_words:
+                    exploded = exploded.filter(
+                        ~F.col("term").isin(list(stop_words))
+                    )
+    else:
+        has_cjk = False
+        # scalar index: one "term" per cell, the string form of the value
+        exploded = df.select(
+            F.col(id_col).alias("id"), col.cast("string").alias("term")
+        ).filter(F.col("term").isNotNull())
+
+    if not positions:
+        exploded = exploded.distinct()  # one (term, id) row per pair
+    return exploded, has_cjk
+
+
 class InvertedIndex:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
@@ -133,91 +229,11 @@ class InvertedIndex:
         is_text: bool = True,
         positions: bool = False,
         typo_keys: "int | None" = None,
-        _write_stats: bool = True,
     ) -> "InvertedIndex":
         spark = df.sparkSession
-        col = F.col(tensor)
-        if is_text:
-            # one bounded probe job decides the tokenizer for the whole
-            # build: pure regex split stays JVM-side (the fast path);
-            # corpora containing CJK route through the Arrow-batched
-            # Python tokenizer so index-side and query-side tokens agree
-            # (tokenize_py is used for both)
-            has_cjk = bool(df.filter(col.rlike("[一-鿿㐀-䶿]")).limit(1).take(1))
-            if has_cjk:
-                from pyspark.sql.types import ArrayType, StringType
-
-                stop_set = frozenset(stop_words) if stop_words else None
-                # lambda (not a hinted def): stringified hints from
-                # `from __future__ import annotations` are unsupported
-                # by pandas_udf signature inference in pyspark 4.1
-                tok_udf = F.pandas_udf(
-                    lambda batch: batch.map(
-                        lambda t: tokenize_py(
-                            t, case_sensitive=case_sensitive, stop_words=stop_set
-                        )
-                    ),
-                    ArrayType(StringType()),
-                )
-                tok_arr = tok_udf(col)
-                if positions:
-                    exploded = df.select(
-                        F.col(id_col).alias("id"),
-                        F.posexplode(tok_arr).alias("pos", "term"),
-                    ).filter(F.col("term") != "")
-                else:
-                    exploded = (
-                        df.select(
-                            F.col(id_col).alias("id"),
-                            F.explode(tok_arr).alias("term"),
-                        )
-                        .filter(F.col("term") != "")
-                    )
-            else:
-                from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX_CS
-
-                if case_sensitive:
-                    base, split_re = col, TOKEN_SPLIT_REGEX_CS
-                else:
-                    base, split_re = F.lower(col), TOKEN_SPLIT_REGEX
-                terms = F.split(base, split_re)
-                if positions:
-                    # positions index the FILTERED token stream (empties
-                    # and stop words removed before numbering), matching
-                    # the query-side tokenize_py stream — adjacency is
-                    # over surviving tokens on both sides
-                    kept = F.filter(terms, lambda t: t != "")
-                    if stop_words:
-                        stop_arr = F.array(*[F.lit(w) for w in stop_words])
-                        kept = F.filter(
-                            kept, lambda t: ~F.array_contains(stop_arr, t)
-                        )
-                    exploded = df.select(
-                        F.col(id_col).alias("id"),
-                        F.posexplode(kept).alias("pos", "term"),
-                    )
-                else:
-                    exploded = (
-                        df.select(
-                            F.col(id_col).alias("id"),
-                            F.explode(terms).alias("term"),
-                        )
-                        .filter(F.col("term") != "")
-                    )
-                    if stop_words:
-                        exploded = exploded.filter(
-                            ~F.col("term").isin(list(stop_words))
-                        )
-        else:
-            has_cjk = False
-            # scalar index: one "term" per cell, the string form of the value
-            exploded = df.select(
-                F.col(id_col).alias("id"), col.cast("string").alias("term")
-            ).filter(F.col("term").isNotNull())
-
-        if not positions:
-            exploded = exploded.distinct()  # one (term, id) row per pair
-        # positional rows are unique by construction (one per token slot)
+        exploded, has_cjk = _posting_rows(
+            df, tensor, id_col, case_sensitive, stop_words, is_text, positions
+        )
         postings = (
             exploded
             .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(num_shards)))
@@ -251,7 +267,7 @@ class InvertedIndex:
         fs.write_text(os.path.join(path, "manifest.json"), json.dumps(manifest))
         out = cls(spark, path)
         out._manifest = manifest
-        if positions and _write_stats:
+        if positions:
             out._write_docstats()
         if typo_keys:
             out.enable_typo_match(max_edits=int(typo_keys))
@@ -664,26 +680,26 @@ class InvertedIndex:
         # no job is scheduled to learn which shards to read
         shard_vals = sorted({shard_of(k, num_shards) for _, k in probe_rows})
         keys = self._typo_keys()
-        # no distinct here (round 13): the (qt, term) dedup runs on the
-        # driver below — the distinct's exchange was a whole AQE stage
-        # job on the warm path for rows the collect dedups anyway.  The
-        # candidate cap now counts pre-dedup rows (a term contributes
-        # once per shared deletion key, a small constant) — it is a
-        # loud OOM guard, and triggering marginally earlier is the safe
-        # direction.
+        # no distinct on the common path (round 13): a term sharing k
+        # deletion keys with a probe token comes back as k rows, and the
+        # driver dedups the (qt, term) pairs below.  The cap bounds the
+        # DEDUPLICATED pairs: only when the raw rows overflow it does a
+        # distinct pass recount them.
         cand = (
             keys.filter(F.col("kshard").isin(shard_vals))
             .join(F.broadcast(probes), "k")
             .select("qt", "term")
             .where(F.levenshtein(F.col("term"), F.col("qt")) <= d)
         )
-        cand_rows = cand.limit(self._TYPO_CANDIDATE_CAP + 1).collect()
-        if len(cand_rows) > self._TYPO_CANDIDATE_CAP:
+        cap = self._TYPO_CANDIDATE_CAP
+        cand_rows = cand.limit(cap + 1).collect()
+        if len(cand_rows) > cap:
+            cand_rows = cand.distinct().limit(cap + 1).collect()
+        if len(cand_rows) > cap:
             raise MullerSparkError(
-                f"typo_match candidate set exceeds "
-                f"{self._TYPO_CANDIDATE_CAP} (query tokens too "
-                "short/dense for this vocabulary); tighten the query or "
-                "lower max_edits"
+                f"typo_match candidate set exceeds {cap} (query tokens "
+                "too short/dense for this vocabulary); tighten the query "
+                "or lower max_edits"
             )
         per_qt: dict = {}
         for r in cand_rows:
@@ -694,6 +710,20 @@ class InvertedIndex:
             return self.spark.createDataFrame([], "id long")
         all_terms = sorted({t for ts in per_qt.values() for t in ts})
         hits = self._lookup_terms(all_terms).select("term", "id")
+        if len(qset) > 63:
+            # a bitmask would overflow a long: keep the distinct
+            # aggregate, as _fuzzy does
+            mapping = self.spark.createDataFrame(
+                sorted((t, qt) for qt, ts in per_qt.items() for t in ts),
+                "term string, qt string",
+            )
+            return (
+                hits.join(F.broadcast(mapping), "term")
+                .groupBy("id")
+                .agg(F.countDistinct("qt").alias("nq"))
+                .filter(F.col("nq") == len(qset))
+                .select("id")
+            )
         # AND-of-query-tokens as ONE bit_or aggregate (round 13): each
         # candidate term carries the bitmask of query tokens it covers
         # (a term can sit within tolerance of several), and a document
@@ -744,26 +774,20 @@ class InvertedIndex:
 
     def update(self, df: DataFrame, commit_id: str | None = None) -> "InvertedIndex":
         """Incremental maintenance after append-only commits (reference
-        ``update_index``, ``inverted_index_vectorized.py:397``): index
-        only the delta rows, merge posting lists per term, rewrite.  The
-        delta is usually tiny relative to the corpus, so the merge
-        shuffles O(delta terms), not the full posting table row count."""
-        import json
-
+        ``update_index``, ``inverted_index_vectorized.py:397``): tokenize
+        only the delta rows, union their posting rows into the existing
+        table, rewrite.  The delta is usually tiny relative to the corpus,
+        so the merge shuffles O(delta terms), not the full posting table
+        row count."""
         m = dict(self.manifest)
-        tmp_path = self.path + "_delta"
-        delta = InvertedIndex.build(
-            df, m["tensor"], tmp_path, id_col=m["id_col"],
-            index_type=m["index_type"], num_shards=m["num_shards"],
-            case_sensitive=m["case_sensitive"],
-            stop_words=m["stop_words"] or None, is_text=m["is_text"],
-            positions=m.get("positions", False),
-            _write_stats=False,  # throwaway delta index: stats never read
+        delta, _ = _posting_rows(
+            df, m["tensor"], m["id_col"], m["case_sensitive"],
+            m["stop_words"] or None, m["is_text"], m.get("positions", False),
         )
         cols = ["term", "id", "pos"] if m.get("positions") else ["term", "id"]
         merged = (
             self._postings().select(*cols)
-            .unionByName(delta._postings().select(*cols))
+            .unionByName(delta.select(*cols))
             .distinct()  # row-level merge: no per-term array ever materializes
             .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(m["num_shards"])))
             .repartition(m["num_shards"], "shard")
@@ -774,8 +798,9 @@ class InvertedIndex:
         old = os.path.join(self.path, "postings")
         self.fs.rmtree(old)
         self.fs.rename(out_path, old)
-        self.fs.rmtree(tmp_path)
         self._invalidate_reads()
+        # the table just written has the merge's schema: no inference job
+        self._postings_df = self.spark.read.schema(merged.schema).parquet(old)
         if m.get("positions"):
             # refresh docstats BEFORE the fresh manifest lands: a crash
             # in between leaves old-manifest + new-stats (harmlessly
@@ -783,7 +808,7 @@ class InvertedIndex:
             # stats that would silently drop the delta docs from BM25
             self._write_docstats()
         m["commit_id"] = commit_id
-        m["n_postings"] = int(self.spark.read.parquet(old).count())
+        m["n_postings"] = int(self._postings().count())
         if m.get("typo_keys"):
             # the deletion-key table derives from the term dictionary —
             # refresh it from the merged postings and re-pin the count

@@ -933,11 +933,13 @@ def append_ivf_assignments(
     id_col: str,
     path: str,
     quantize_bits: "int | None" = None,
+    centroids: "np.ndarray | None" = None,
 ) -> None:
     """Incremental maintenance: assign only the delta rows to the
     existing centroids and append to the ``assign`` table — the
     reference's ``update_index`` regime (``vector_search_ops.py:51-82``),
-    O(delta), no rebuild.
+    O(delta), no rebuild.  ``centroids`` are the artifact's own when the
+    caller already holds them (a loaded index); else they are read.
 
     The delta MUST land in the same layout the table already has
     (plain, inverted-list float32 ``vec``, or SQ8 ``qvec``+``scale``) —
@@ -949,7 +951,8 @@ def append_ivf_assignments(
     import os
 
     spark = df_delta.sparkSession
-    centroids = load_ivf_centroids(spark, path)
+    if centroids is None:
+        centroids = load_ivf_centroids(spark, path)
     existing = spark.read.parquet(os.path.join(path, "assign"))
     has_vec = "vec" in existing.columns
     has_q = "qvec" in existing.columns

@@ -31,6 +31,7 @@ index maps cannot.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -117,8 +118,8 @@ def _changed_row(j: DataFrame, prefix: str, tensors: Sequence[str]) -> Column:
     return out
 
 
+@contextmanager
 def three_way_merge(
-    ds,
     ours_df: DataFrame,
     theirs_df: DataFrame,
     base_df: DataFrame,
@@ -132,6 +133,9 @@ def three_way_merge(
     force: bool,
     next_uuid: int,
 ):
+    """Yield ``(merged_df, merged_meta, next_uuid)``.  ``merged_df`` is
+    lazy over the cached 3-way join, which is released when the block
+    exits — write the result inside the ``with`` block."""
     merged_meta = merge_schemas(
         ours_meta, theirs_meta, base_meta, delete_removed_tensors, force
     )
@@ -146,15 +150,15 @@ def three_way_merge(
     common = [t for t in tensors if t in ours_meta and t in theirs_meta]
     j = _joined(ours_df, theirs_df, base_df, tensors).cache()
     try:
-        return _three_way_body(
+        yield _three_way_body(
             j, tensors, common, merged_meta, next_uuid,
             append_resolution, update_resolution, pop_resolution,
         )
     finally:
-        # unpersist on EVERY exit — a MergeConflictError raise would
-        # otherwise leak the cached 3-way join for the session; the
-        # returned result is lazy either way (the cache only ever
-        # served the census collect)
+        # the census collect fills the cache and the caller's write of
+        # the lazy result reads it back, so the snapshots are scanned and
+        # joined once; released on EVERY exit, a MergeConflictError
+        # raised by the census included
         j.unpersist()
 
 
@@ -418,36 +422,50 @@ def snapshot_diff(
     max_rows: int = 100_000,
 ) -> dict:
     """Dict form of :func:`snapshot_diff_df` (reference API shape,
-    ``operations/diff.py:188-355``), materialized only under a row cap —
-    one bounded count job runs first, and an oversized report raises
-    instead of collecting."""
+    ``operations/diff.py:188-355``), materialized only under a row cap.
+    One pass: a single collect of at most ``max_rows + 1`` changed rows,
+    each carrying the ``(old, new)`` pair of only the tensors it changed.
+    An oversized report raises instead of collecting; only then does a
+    count run, so the error names the exact size."""
     j = _diff_joined(df, base_df, tensors)
     in_o, in_b = F.col("o_in"), F.col("b_in")
 
     changed = (in_o & ~in_b) | (in_b & ~in_o)
-    for t in tensors:
-        changed = changed | (in_o & in_b & _neq(F.col(f"o_{t}"), F.col(f"b_{t}")))
-    _guard_report_size(
-        j.filter(changed).count(), max_rows, "diff report", "diff(as_dict=False)"
-    )
-
-    appended = [r[0] for r in j.filter(in_o & ~in_b).select(UUID_COL).collect()]
-    popped = [r[0] for r in j.filter(in_b & ~in_o).select(UUID_COL).collect()]
-    updated: dict[str, list] = {}
-    for t in tensors:
+    cells = []
+    for i, t in enumerate(tensors):
         o_c, b_c = F.col(f"o_{t}"), F.col(f"b_{t}")
-        rows = (
-            j.filter(in_o & in_b & _neq(o_c, b_c))
-            .select(
-                F.col(UUID_COL),
-                F.col(f"o_{ROW_ID_COL}").alias("index"),
-                b_c.alias("old_value"),
-                o_c.alias("new_value"),
-            )
-            .collect()
+        upd = in_o & in_b & _neq(o_c, b_c)
+        changed = changed | upd
+        cells.append(
+            F.when(upd, F.struct(b_c.alias("old"), o_c.alias("new"))).alias(f"_c{i}")
         )
-        if rows:
-            updated[t] = [r.asDict() for r in rows]
+    rows = (
+        j.filter(changed)
+        .select(UUID_COL, "o_in", "b_in", F.col(f"o_{ROW_ID_COL}").alias("index"), *cells)
+        .limit(max_rows + 1)
+        .collect()
+    )
+    if len(rows) > max_rows:
+        _guard_report_size(
+            j.filter(changed).count(), max_rows, "diff report", "diff(as_dict=False)"
+        )
+
+    appended, popped = [], []
+    updated: dict[str, list] = {}
+    for r in rows:
+        if not r["b_in"]:
+            appended.append(r[UUID_COL])
+        elif not r["o_in"]:
+            popped.append(r[UUID_COL])
+        for i, t in enumerate(tensors):
+            cell = r[f"_c{i}"]
+            if cell is not None:
+                updated.setdefault(t, []).append({
+                    UUID_COL: r[UUID_COL], "index": r["index"],
+                    "old_value": cell["old"], "new_value": cell["new"],
+                })
+    for recs in updated.values():
+        recs.sort(key=lambda rec: rec["index"])
     return {"appended": sorted(appended), "popped": sorted(popped), "updated": updated}
 
 

@@ -20,3 +20,26 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     session = get_spark("muller_spark_tests")
     yield session
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns how many jobs it started (the status tracker's job ids for
+    the group, read once the listener bus has drained)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs_of")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
